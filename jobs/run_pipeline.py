@@ -6,14 +6,18 @@ Usage:
         --checkpoint /tmp/ckpt [--parallelism 32] [--corrupt]
 
 Stage 0 (once): materialize pages partitioned by days(warc_ts) — the
-Iceberg-style layout. Unit of work = one warc_day partition; each chunk's
-scan is PARTITION-PRUNED to that day's files (never rescans completed
-days on resume).
+Iceberg-style layout. Unit of work = one warc_day partition (a chunk).
 
-Per chunk (SURVEY.md §2D): pruned scan -> synth -> tag lineage -> parse
-(vectorized UDF) -> enrich (broadcast joins) -> salted route write
-(per-severity sinks + rejects) -> hourly agg -> metrics -> ATOMIC manifest
-commit. Re-running after a crash processes only pending days.
+One pass over ALL pending chunks (SURVEY.md §2D): scan PARTITION-PRUNED
+to the pending days' files (never rescans completed days on resume) ->
+synth -> parse (vectorized UDF, lineage-tagged) -> enrich (pure
+projections), persisted once -> the pending days' output directories
+cleared -> three jobs over it: the route write (per-severity sinks +
+rejects under chunk=<day>/sink=<s>/, AQE-rebalanced, dynamic partition
+overwrite), the hourly agg (agg/chunk=<day>/) and one small grouped
+collect of every chunk's metrics -> one ATOMIC manifest entry per chunk.
+A crash before the manifests are written re-runs every chunk of that
+pass; committed chunks are never rescanned or rewritten.
 """
 
 from __future__ import annotations
@@ -21,8 +25,11 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
+import shutil
 import sys
 import time
+from collections import Counter
 
 # running as a plain script puts jobs/ on sys.path; add the repo root so
 # `sparklog` imports without --py-files in local runs
@@ -57,56 +64,59 @@ def main() -> None:
         synth.write_pages_partitioned(spark, args.input, pages_dir)
     pages = spark.read.parquet(pages_dir)
 
-    planned = sorted(
-        str(r["warc_day"]) for r in pages.select("warc_day").distinct().collect()
-    )
+    # planned chunks = the table's partition directories, read from its
+    # file index: no Spark job, and no completed day's file is opened
+    planned = sorted({re.search(r"/warc_day=([^/]+)/", f).group(1)
+                      for f in pages.inputFiles()})
     pending = CK.pending_chunks(args.checkpoint, planned)
     print(f"chunks pending: {pending}")
 
-    for day in pending:
+    if pending:
         t0 = time.perf_counter()
-        # partition-pruned scan: only this day's files are read
-        day_pages = pages.filter(F.col("warc_day") == day).select(
-            "doc_id", "text", "lang"
+        # ONE partition-pruned scan: only the pending days' files are read
+        pending_pages = pages.filter(F.col("warc_day").isin(pending)).select(
+            "doc_id", "text", "lang",
+            F.col("warc_day").cast("string").alias("chunk"),
         )
-        chunk_lines = synth.lines_from_docs(day_pages, corrupt=args.corrupt)
+        lines = synth.lines_from_docs(pending_pages, corrupt=args.corrupt,
+                                      carry=("chunk",))
         # lineage tagging fused into the parse pass: ONE Python crossing
-        parsed = parse_df(chunk_lines, tag_lineage=True)
-        # ONE parse per chunk: route_write, hourly_agg, partition_metrics
-        # and the content fingerprint all consume the same persisted frame
-        # (previously each re-executed synth -> parse, i.e. 4x the work)
+        parsed = parse_df(lines, tag_lineage=True)
+        # ONE parse per pass: the route write, the hourly agg and the
+        # chunk metrics all consume the same persisted frame
         enriched = PL.enrich(parsed, spark, with_lang=False).persist()
+        # dynamic overwrite replaces only the partitions this pass writes:
+        # clear every pending day first, so a sink or agg partition left by
+        # an uncommitted earlier attempt cannot survive next to the new one
+        for day in pending:
+            for root in (args.output, os.path.join(args.output, "agg")):
+                shutil.rmtree(os.path.join(root, f"chunk={day}"),
+                              ignore_errors=True)
         try:
-            sink_dir = os.path.join(args.output, f"chunk={day}")
-            counts = PL.route_write(enriched, sink_dir)
-
-            agg = PL.hourly_agg(enriched.filter(F.col("parse_error").isNull()))
-            agg.write.mode("overwrite").parquet(
-                os.path.join(args.output, f"agg/chunk={day}")
-            )
-            metrics_rows = [
-                r.asDict() for r in M.partition_metrics(enriched).collect()
-            ]
-
-            rows_in = sum(r["rows_in"] for r in metrics_rows)
-            rows_ok = sum(r["rows_ok"] for r in metrics_rows)
-            rows_rej = sum(r["rows_rejected"] for r in metrics_rows)
-            # conservation law: every input row lands in exactly one sink
-            assert sum(counts.values()) == rows_in, (counts, rows_in)
-
-            CK.write_manifest_entry(args.checkpoint, {
-                "chunk": day,
-                "rows_in": rows_in,
-                "rows_ok": rows_ok,
-                "rows_rejected": rows_rej,
-                "sink_counts": counts,
-                "fingerprint": CK.content_fingerprint(enriched),
-                "partitions": metrics_rows,
-                "wall_sec": round(time.perf_counter() - t0, 3),
-            })
+            counts = PL.route_write(enriched, args.output,
+                                    partition_cols=("chunk",))
+            agg = PL.hourly_agg(enriched.filter(F.col("parse_error").isNull()),
+                                by=("chunk",))
+            (agg.write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("chunk").parquet(os.path.join(args.output, "agg")))
+            entries = M.chunk_entries(M.chunk_metrics(enriched).collect())
         finally:
             enriched.unpersist()
-        print(f"chunk {day}: in={rows_in} ok={rows_ok} rej={rows_rej}")
+        # the write's observed sink totals are the chunks' counts summed
+        totals = sum((Counter(e["sink_counts"]) for e in entries.values()),
+                     Counter())
+        assert counts == totals, (counts, totals)
+        # every chunk's entry carries the wall of the whole pass
+        wall_sec = round(time.perf_counter() - t0, 3)
+        for day in pending:
+            e = entries[day]
+            # conservation law: every input row lands in exactly one sink
+            assert sum(e["sink_counts"].values()) == e["rows_in"], (day, e)
+            CK.write_manifest_entry(args.checkpoint,
+                                    {"chunk": day, **e, "wall_sec": wall_sec})
+            print(f"chunk {day}: in={e['rows_in']} ok={e['rows_ok']} "
+                  f"rej={e['rows_rejected']}")
 
     done = CK.done_chunks(args.checkpoint)
     summary = {

@@ -1,18 +1,21 @@
 """Checkpoint/resume for the batch pipeline (north-rule stage D9).
 
 Unit of work = one ``warc_day`` partition of the pages table (the Iceberg
-``days(warc_ts)`` partition spec): each chunk's scan is PARTITION-PRUNED to
-that day's files, so resuming never rescans completed days. A hash-based
-chunk key (``hash_chunk_col``) remains available for unpartitioned inputs.
+``days(warc_ts)`` partition spec): a run's scan is PARTITION-PRUNED to
+the pending days' files, so resuming never rescans completed days. A
+hash-based chunk key (``hash_chunk_col``) remains available for
+unpartitioned inputs.
 
 Protocol:
   1. planned chunks = the table's partition values; done = manifest entries.
-  2. each run processes only pending chunks; after a chunk's sinks are
-     written, its manifest entry (chunk key, rows_in, rows_ok,
-     rows_rejected, per-partition lineage, content fingerprint) is written
-     ATOMICALLY (tmp file + rename) — a crash mid-chunk leaves no entry, so
-     the chunk reruns idempotently (sink writes go to per-chunk
-     subdirectories, overwrite mode).
+  2. each run processes all pending chunks in one pass; after their sinks
+     are written, each chunk's manifest entry (chunk key, rows_in,
+     rows_ok, rows_rejected, sink counts, per-partition lineage, content
+     fingerprint) is written ATOMICALLY (tmp file + rename). A crash
+     before that leaves no entry, so those chunks rerun idempotently:
+     a run clears its pending chunks' output directories, then writes
+     them as per-chunk partitions under dynamic overwrite, which leaves
+     every other chunk's partitions untouched.
   3. resume = anti-join of planned vs manifest — restart-safe.
 """
 
@@ -79,14 +82,18 @@ def pending_chunks(checkpoint_dir: str, planned) -> list:
     return [c for c in planned if str(c) not in done]
 
 
-def content_fingerprint(df: DataFrame) -> int:
-    """Order-independent content hash of a chunk's parsed output: sum of
-    per-row xxhash64 folded to 31 bits (keeps the ANSI-mode long sum safe
-    for up to 2^32 rows per chunk)."""
+def row_fingerprint() -> F.Column:
+    """Per-row content hash of parsed output: xxhash64 of (doc_id,
+    parse_error) folded to 31 bits (keeps the ANSI-mode long sum safe for
+    up to 2^32 rows per chunk). Summed, it is order-independent."""
     row_hash = F.xxhash64(
         F.col("doc_id"), F.coalesce(F.col("parse_error"), F.lit(""))
     )
-    r = df.select(
-        F.sum(F.pmod(row_hash, F.lit(2147483647))).alias("fp")
-    ).collect()[0]
+    return F.pmod(row_hash, F.lit(2147483647))
+
+
+def content_fingerprint(df: DataFrame) -> int:
+    """Order-independent content hash of a chunk's parsed output: the sum
+    of ``row_fingerprint`` over its rows."""
+    r = df.select(F.sum(row_fingerprint()).alias("fp")).collect()[0]
     return int(r["fp"] or 0)

@@ -1,52 +1,25 @@
 """Per-partition lineage + metrics (north-rule stage D10).
 
-``with_metrics`` wraps any line-bearing DataFrame stage in a mapInPandas
-pass that tags every row with its input partition and, as a side product,
-lets ``collect_partition_metrics`` aggregate per-partition counters:
-(partition_id, rows_in, rows_ok, rows_rejected, bytes_in, wall_ms).
-
-The counters are computed from the tagged rows themselves (one groupBy),
-so they are exact under retries/speculation — a re-run partition simply
-reproduces the same rows, unlike accumulator-based counting which
-double-counts retried tasks. Lineage = (doc_id -> partition_id, batch_ts)
-is queryable and joins back to the checkpoint manifest.
+``udf.parse_df(tag_lineage=True)`` tags every row with its input
+partition and line size, (partition_id, bytes_in), inside the parse's own
+Arrow pass. The metrics here are aggregated from those tagged rows (one
+groupBy), so they are exact under retries/speculation — a re-run
+partition simply reproduces the same rows, unlike accumulator-based
+counting which double-counts retried tasks. Lineage = (doc_id ->
+partition_id) is queryable and joins back to the checkpoint manifest.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from sparklog.checkpoint import row_fingerprint
+from sparklog.pipeline import SINK_NAMES, sink_col
 
-def tag_partitions(df: DataFrame, line_col: str = "line") -> DataFrame:
-    """Add (partition_id, bytes_in) lineage columns via one Arrow pass."""
-    schema = T.StructType(
-        df.schema.fields
-        + [
-            T.StructField("partition_id", T.IntegerType()),
-            T.StructField("bytes_in", T.LongType()),
-        ]
-    )
-
-    def tag(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for pdf in it:
-            pdf = pdf.copy()
-            pdf["partition_id"] = pid
-            pdf["bytes_in"] = (
-                pdf[line_col].fillna("").str.encode("utf-8").str.len().astype("int64")
-                if line_col in pdf.columns
-                else 0
-            )
-            yield pdf
-
-    return df.mapInPandas(tag, schema)
+# keys of one per-partition lineage row, in manifest order
+PARTITION_KEYS = ("partition_id", "rows_in", "rows_ok", "rows_rejected",
+                  "bytes_in")
 
 
 def partition_metrics(parsed_tagged: DataFrame) -> DataFrame:
@@ -65,3 +38,43 @@ def partition_metrics(parsed_tagged: DataFrame) -> DataFrame:
         )
         .orderBy("partition_id")
     )
+
+
+def chunk_metrics(enriched: DataFrame) -> DataFrame:
+    """One row per (chunk, partition_id) of tagged+enriched rows: the
+    partition metrics, the content fingerprint's partial sum and a row
+    count per route sink. A few rows per chunk, so one small collect
+    yields every chunk's manifest figures (``chunk_entries``)."""
+    ok = F.col("parse_error").isNull()
+    sink = sink_col()
+    return enriched.groupBy("chunk", "partition_id").agg(
+        F.count(F.lit(1)).alias("rows_in"),
+        F.count(F.when(ok, 1)).alias("rows_ok"),
+        F.count(F.when(~ok, 1)).alias("rows_rejected"),
+        F.sum("bytes_in").alias("bytes_in"),
+        F.sum(row_fingerprint()).alias("fingerprint"),
+        *[F.count(F.when(sink == s, 1)).alias(s) for s in SINK_NAMES],
+    )
+
+
+def chunk_entries(rows) -> dict[str, dict]:
+    """Fold collected ``chunk_metrics`` rows into per-chunk manifest
+    figures: rows_in/ok/rejected, sink_counts (non-empty sinks, in
+    SINK_NAMES order), the content fingerprint (a sum, so partial sums
+    add up to ``checkpoint.content_fingerprint`` of the chunk) and the
+    per-partition lineage rows, ordered by partition_id."""
+    out: dict[str, dict] = {}
+    for r in sorted(rows, key=lambda r: (str(r["chunk"]), r["partition_id"])):
+        e = out.setdefault(str(r["chunk"]), {
+            "rows_in": 0, "rows_ok": 0, "rows_rejected": 0,
+            "sink_counts": dict.fromkeys(SINK_NAMES, 0),
+            "fingerprint": 0, "partitions": [],
+        })
+        for k in ("rows_in", "rows_ok", "rows_rejected", "fingerprint"):
+            e[k] += r[k]
+        for s in SINK_NAMES:
+            e["sink_counts"][s] += r[s]
+        e["partitions"].append({k: r[k] for k in PARTITION_KEYS})
+    for e in out.values():
+        e["sink_counts"] = {s: n for s, n in e["sink_counts"].items() if n}
+    return out

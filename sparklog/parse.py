@@ -112,8 +112,11 @@ _FRAC_SCALE = [None] + [10 ** (9 - k) for k in range(1, 10)]
 
 # (year_str, month, day) -> epoch days, for VALID dates only (invalid
 # dates never enter, so the validation branch still runs for them).
-# Bounded by the distinct dates a worker sees (thousands, not rows).
+# A worker usually sees thousands of distinct dates, not rows; past
+# _YMD_DAYS_CACHE_MAX keys (adversarial or very long-range input) new
+# dates are computed exactly by _days_from_civil but no longer cached.
 _YMD_DAYS_CACHE: dict = {}
+_YMD_DAYS_CACHE_MAX = 100_000
 
 
 def _is_leap(y):
@@ -525,7 +528,8 @@ def parse_lines(lines: pd.Series) -> pd.DataFrame:
                             row = _parse_slow(s)
                             break
                         days = int(_days_from_civil(int(y), mo, d))
-                        ymd_days[(y, mo, d)] = days
+                        if len(ymd_days) < _YMD_DAYS_CACHE_MAX:
+                            ymd_days[(y, mo, d)] = days
                     if h > 23 or mi > 59 or sec > 59:
                         row = _parse_slow(s)
                         break

@@ -1,44 +1,31 @@
 """Pipeline operators: enrich -> route -> aggregate (north-rule stages D4-D8).
 
 Scale posture (SURVEY.md §2D):
-  - enrich: broadcast hash joins against 24/8/9-row lookup dims — zero
-    shuffle, the build side replicates to every executor.
-  - route: ONE pass, shuffle-free fan-out via dynamic-partitioned write on
-    severity_name (8 sinks + 1 rejects sink).
-  - skew: hostname/lang are Zipf-skewed; the salted repartition spreads hot
-    keys over SALT buckets before the write; AQE skew-join handles the rest.
+  - enrich: pure projections — the facility/severity/lang dims are closed
+    24/8/9-value domains, looked up by literal array index / CASE, so
+    there is no join, no shuffle and no broadcast build.
+  - route: ONE write pass, fan-out via a dynamic-partitioned write on
+    the sink (8 severities + 1 rejects sink), optionally under further
+    partition columns such as the job's day chunk.
+  - skew: the route write's pre-shuffle is an AQE REBALANCE on the
+    partition columns, so Spark splits a hot sink at runtime by its
+    measured size instead of a fixed salt; ``salted`` remains the
+    helper for skewed hostname/lang keys (north rule D6).
   - aggregate: partial+final hash agg (automatic for count), single shuffle
-    on the 3 grouping keys.
+    on the grouping keys.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparklog.schema import FACILITY_NAMES, LANG_NAMES, SEVERITY_NAMES
 
 SALT_BUCKETS = 16
 
-
-# --- lookup dims (FIXTURES.md §4; facility.rs:87-114, severity.rs:57-68) ---
-
-def facility_lookup(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        list(enumerate(FACILITY_NAMES)), "facility INT, facility_name STRING"
-    )
-
-
-def severity_lookup(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        list(enumerate(SEVERITY_NAMES)), "severity INT, severity_name STRING"
-    )
-
-
-def lang_lookup(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        list(LANG_NAMES.items()), "lang_code STRING, lang_name STRING"
-    )
+# route_write's sinks, in manifest order: one per severity, then rejects
+SINK_NAMES = [*SEVERITY_NAMES, "_rejects"]
 
 
 # --- stages -----------------------------------------------------------------
@@ -117,10 +104,11 @@ def hour_epoch(ts_col: str = "timestamp") -> F.Column:
     return (c - c % 3600).alias("hour_epoch")
 
 
-def hourly_agg(enriched: DataFrame) -> DataFrame:
-    """per-facility/severity/hour counts — partial+final hash agg."""
+def hourly_agg(enriched: DataFrame, by: tuple[str, ...] = ()) -> DataFrame:
+    """per-facility/severity/hour counts — partial+final hash agg; ``by``
+    adds leading grouping columns (e.g. the job's day chunk)."""
     return (
-        enriched.groupBy("facility_name", "severity_name", hour_epoch())
+        enriched.groupBy(*by, "facility_name", "severity_name", hour_epoch())
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
@@ -311,27 +299,42 @@ def write_bucketed(df: DataFrame, table: str, key: str = "doc_id",
     )
 
 
-def route_write(enriched: DataFrame, out_dir: str) -> dict[str, int]:
+def sink_col() -> Column:
+    """The route sink of a row: its severity name, or ``_rejects``."""
+    return F.coalesce(F.col("severity_name"), F.lit("_rejects"))
+
+
+def route_write(enriched: DataFrame, out_dir: str,
+                partition_cols: tuple[str, ...] = ()) -> dict[str, int]:
     """Fan-out to per-severity sinks in ONE write pass; rejects get their
     own sink. Per-sink row counts come from df.observe() metrics attached
     to the SAME write job — no second scan of the output (at 100 TB a
     read-back count is a full extra pass over everything just written).
+
+    The layout is ``out_dir/<col>=<v>/.../sink=<s>/``. With
+    ``partition_cols`` the write overwrites dynamically: only the
+    partitions it writes are replaced, so a resumed job rewrites its
+    pending chunks and leaves committed ones untouched. Without them the
+    whole ``out_dir`` is replaced. The returned counts are summed over
+    all partition values.
 
     Routed-row equality (BASELINE.md) is asserted by tests/test_pipeline.py
     via anti-joins of each sink against the severity filter.
     """
     from pyspark.sql import Observation
 
-    sink_names = list(SEVERITY_NAMES) + ["_rejects"]
-    sink_key = F.coalesce(F.col("severity_name"), F.lit("_rejects"))
-    df = enriched.withColumn("sink", sink_key)
+    keys = [*partition_cols, "sink"]
+    df = enriched.withColumn("sink", sink_col())
     obs = Observation()
     df = df.observe(
         obs,
-        *[F.count(F.when(F.col("sink") == s, 1)).alias(s) for s in sink_names],
+        *[F.count(F.when(F.col("sink") == s, 1)).alias(s) for s in SINK_NAMES],
     )
-    # pre-shuffle on (sink, salt): each task writes few files per sink and
-    # hot severities still spread across tasks
-    df = salted(df, "sink")
-    df.write.mode("overwrite").partitionBy("sink").parquet(out_dir)
+    # AQE REBALANCE on the partition columns: each (chunk, sink) lands in
+    # one task and so one file, unless AQE measures it above the advisory
+    # partition size and splits it across tasks (runtime skew handling)
+    writer = df.hint("rebalance", *keys).write.mode("overwrite")
+    if partition_cols:
+        writer = writer.option("partitionOverwriteMode", "dynamic")
+    writer.partitionBy(*keys).parquet(out_dir)
     return {k: int(v) for k, v in obs.get.items() if v}

@@ -120,8 +120,11 @@ def lines_df(spark: SparkSession, sf_dir: str, corrupt: bool = False) -> DataFra
     return lines_from_docs(pages_df(spark, sf_dir), corrupt=corrupt)
 
 
-def lines_from_docs(pages: DataFrame, corrupt: bool = False) -> DataFrame:
-    """Line synthesis over any frame with (doc_id, text, lang)."""
+def lines_from_docs(pages: DataFrame, corrupt: bool = False,
+                    carry: tuple[str, ...] = ()) -> DataFrame:
+    """Line synthesis over any frame with (doc_id, text, lang): (doc_id,
+    *carry, line), where ``carry`` names input columns passed through
+    unchanged (e.g. the job's day chunk)."""
     pri = F.expr(R.PRI).cast("string")
     header = F.concat(
         F.lit("<"), pri, F.lit(">1 "),
@@ -148,4 +151,4 @@ def lines_from_docs(pages: DataFrame, corrupt: bool = False) -> DataFrame:
             .otherwise(F.lit("<39>1 2018-05-15T20:56:58+00:00 -web1west -"))
         )
         line = F.when(F.expr(R.CORRUPT), bad).otherwise(line)
-    return pages.select("doc_id", line.alias("line"))
+    return pages.select("doc_id", *carry, line.alias("line"))

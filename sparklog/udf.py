@@ -43,7 +43,7 @@ def parse_df(df: DataFrame, line_col: str = "line",
     Output: passthrough columns + the 13 PARSED_COLUMNS, flattened; with
     tag_lineage=True also (partition_id, bytes_in) — fused into the SAME
     Arrow pass, so the lineage-tagged pipeline still crosses into Python
-    exactly once (a separate tag_partitions pass costs a second full
+    exactly once (a separate tagging pass costs a second full
     Arrow round-trip of every line).
 
     Uses mapInPandas rather than a struct-returning pandas UDF: Catalyst

@@ -2,19 +2,28 @@
 
 from __future__ import annotations
 
+import importlib.util
 import json
 import os
+import re
+import shutil
 import subprocess
 import sys
+from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from sparklog import checkpoint as CK
 from sparklog import metrics as M
+from sparklog import pipeline as PL
 from sparklog import synth
 from sparklog.udf import parse_df
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, last_execution_id, sql_plans
+
+JOB = Path(__file__).resolve().parents[1] / "jobs" / "run_pipeline.py"
+DAYS = [f"2016-01-{d}" for d in range(10, 17)]  # sf0.001's 7-day window
 
 
 def test_manifest_atomic_roundtrip(tmp_path):
@@ -33,8 +42,7 @@ def test_manifest_atomic_roundtrip(tmp_path):
 
 def test_partition_metrics_conservation(spark):
     lines = synth.lines_df(spark, SF_SMOKE, corrupt=True).repartition(4)
-    tagged = M.tag_partitions(lines)
-    parsed = parse_df(tagged)
+    parsed = parse_df(lines, tag_lineage=True)
     mx = M.partition_metrics(parsed).collect()
     assert len(mx) == 4
     total_in = sum(r["rows_in"] for r in mx)
@@ -86,6 +94,138 @@ def test_run_pipeline_resume(tmp_path):
     assert summary["rows_rejected"] > 0
     # per-day lineage recorded
     assert all("partitions" in e for e in done.values())
+
+
+def test_chunk_entries_match_per_chunk_metrics(spark):
+    """The job's one grouped collect yields, per chunk, the same figures
+    as partition_metrics, content_fingerprint and the route sinks of that
+    chunk alone."""
+    lines = synth.lines_df(spark, SF_SMOKE, corrupt=True).repartition(3)
+    enriched = PL.enrich(
+        parse_df(lines.withColumn("chunk", (F.col("doc_id") % 2).cast("string")),
+                 tag_lineage=True),
+        spark, with_lang=False,
+    ).cache()
+    entries = M.chunk_entries(M.chunk_metrics(enriched).collect())
+    assert sorted(entries) == ["0", "1"]
+    for c, e in entries.items():
+        one = enriched.filter(F.col("chunk") == c)
+        assert e["fingerprint"] == CK.content_fingerprint(one)
+        want = [r.asDict() for r in M.partition_metrics(one).collect()]
+        assert e["partitions"] == want
+        assert e["rows_in"] == sum(r["rows_in"] for r in want)
+        assert e["rows_ok"] == sum(r["rows_ok"] for r in want)
+        assert e["rows_rejected"] == sum(r["rows_rejected"] for r in want) > 0
+        sinks = {r["s"]: r["n"] for r in one.groupBy(PL.sink_col().alias("s"))
+                 .agg(F.count(F.lit(1)).alias("n")).collect()}
+        assert e["sink_counts"] == sinks
+        assert list(e["sink_counts"]) == [s for s in PL.SINK_NAMES if s in sinks]
+    enriched.unpersist()
+
+
+@pytest.fixture(scope="module")
+def staged_pages(spark, tmp_path_factory):
+    """sf0.001 pages, day-partitioned as the job's stage 0 writes them."""
+    pages = tmp_path_factory.mktemp("pages") / "_pages"
+    synth.write_pages_partitioned(spark, SF_SMOKE, str(pages))
+    return pages
+
+
+def _run_job_inprocess(staged: Path, out: Path, ckpt: Path, monkeypatch,
+                       days=DAYS) -> None:
+    """jobs/run_pipeline.main in this process (on the test session), over
+    a hard-linked copy of the staged pages holding only ``days``."""
+    if not (out / "_pages").exists():
+        (out / "_pages").mkdir(parents=True)
+        os.link(staged / "_SUCCESS", out / "_pages" / "_SUCCESS")
+        for d in days:
+            shutil.copytree(staged / f"warc_day={d}",
+                            out / "_pages" / f"warc_day={d}",
+                            copy_function=os.link)
+    spec = importlib.util.spec_from_file_location("run_pipeline", JOB)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    monkeypatch.setattr(sys, "argv", [
+        "run_pipeline.py", "--input", SF_SMOKE, "--output", str(out),
+        "--checkpoint", str(ckpt), "--parallelism", "8", "--corrupt"])
+    job.main()
+
+
+def _part_files(out: Path) -> dict[Path, tuple[int, int]]:
+    """part file -> (inode, mtime) for the sinks and the hourly agg."""
+    files = [*out.glob("chunk=*/sink=*/part-*"), *out.glob("agg/chunk=*/part-*")]
+    return {p.relative_to(out): (p.stat().st_ino, p.stat().st_mtime_ns)
+            for p in files}
+
+
+def test_resume_rewrites_only_the_pending_day(spark, staged_pages, tmp_path,
+                                              monkeypatch):
+    """Resume after losing one day's manifest entry: only that day is
+    scanned (partition-pruned) and rewritten. Every other day's sink and
+    agg files keep their inode and mtime, and the re-run day holds no
+    file of the first attempt, not even under a sink or agg partition
+    the re-run does not write."""
+    out, ckpt = tmp_path / "out", tmp_path / "ckpt"
+    _run_job_inprocess(staged_pages, out, ckpt, monkeypatch)
+    first, done = _part_files(out), CK.done_chunks(str(ckpt))
+    assert sorted(done) == DAYS
+
+    day = "2016-01-12"
+    CK.remove_manifest_entry(str(ckpt), day)
+    # an earlier, uncommitted attempt wrote a sink this re-run will not
+    part = next((out / f"chunk={day}").glob("sink=*/part-*"))
+    stale = out / f"chunk={day}" / "sink=_stale" / part.name
+    stale.parent.mkdir()
+    shutil.copy(part, stale)
+    stale_agg = out / "agg" / f"chunk={day}" / "part-stale.parquet"
+    shutil.copy(part, stale_agg)
+    mark = last_execution_id(spark)
+    _run_job_inprocess(staged_pages, out, ckpt, monkeypatch)
+    second = _part_files(out)
+
+    def split(files):
+        mine = {p: v for p, v in files.items() if f"chunk={day}" in p.parts}
+        return mine, {p: v for p, v in files.items() if p not in mine}
+
+    (old_day, old_rest), (new_day, new_rest) = split(first), split(second)
+    assert new_rest == old_rest and len(old_rest) > 6 * 2
+    assert new_day and not set(new_day) & set(old_day)
+    assert not stale.parent.exists() and not stale_agg.exists()
+    assert spark.read.parquet(str(out / f"chunk={day}")).count() == \
+        done[day]["rows_in"]
+    again = CK.done_chunks(str(ckpt))
+    assert {d: again[d] for d in DAYS if d != day} == \
+        {d: done[d] for d in DAYS if d != day}
+    for key in ("rows_in", "rows_ok", "rows_rejected", "sink_counts",
+                "fingerprint"):
+        assert again[day][key] == done[day][key], key
+
+    filters = [ln for _, plan in sql_plans(spark, mark)
+               for ln in plan.splitlines() if "PartitionFilters:" in ln]
+    assert filters
+    for ln in filters:
+        assert set(re.findall(r"\d{4}-\d{2}-\d{2}", ln)) == {day}, ln
+
+
+def test_jobs_per_run_do_not_grow_with_days(spark, staged_pages, tmp_path,
+                                            monkeypatch):
+    """One pass over all pending days, not one pass per day: a 1-day and
+    a 7-day pages table take the same number of Spark jobs."""
+    sc = spark.sparkContext
+    jobs = {}
+    for days in (DAYS[:1], DAYS):
+        group = f"run-pipeline-{len(days)}-days"
+        sc.setJobGroup(group, "jobs per run")
+        try:
+            _run_job_inprocess(staged_pages, tmp_path / group,
+                               tmp_path / f"{group}.ckpt", monkeypatch,
+                               days=days)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[len(days)] = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert sorted(CK.done_chunks(str(tmp_path / f"{group}.ckpt"))) == days
+    assert jobs[1] == jobs[7], jobs
 
 
 def test_hash_chunking_is_partition_stable(spark):

@@ -77,6 +77,24 @@ def test_null_input_line():
     assert df.iloc[1]["parse_error"] is None
 
 
+def test_ymd_days_cache_capped(monkeypatch):
+    """Past the cap, new dates are no longer cached, yet every timestamp
+    still parses exactly as the slow path computes it."""
+    monkeypatch.setattr(P, "_YMD_DAYS_CACHE", {})
+    monkeypatch.setattr(P, "_YMD_DAYS_CACHE_MAX", 10)
+    lines = pd.Series([
+        f"<34>1 {1970 + k * 7}-{1 + k % 12:02d}-{1 + k % 28:02d}T01:02:03Z"
+        " h a p m - x"
+        for k in range(60)
+    ])
+    fast = P.parse_lines(lines)
+    assert len(P._YMD_DAYS_CACHE) == 10
+    for i, line in enumerate(lines):
+        slow = P._parse_slow(line)
+        assert slow["parse_error"] is None
+        assert fast.iloc[i]["timestamp"] == slow["timestamp"], line
+
+
 def test_differential_fuzz():
     """Property test: fast path == slow path on mutated corpus lines."""
     import random

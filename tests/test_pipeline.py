@@ -10,7 +10,7 @@ from sparklog import pipeline as PL
 from sparklog import synth
 from sparklog.udf import parse_df
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, last_execution_id, sql_plans
 
 
 @pytest.fixture(scope="module")
@@ -44,6 +44,46 @@ def test_route_write_and_equality(spark, parsed, tmp_path):
         ).select("doc_id")
         assert sink_rows.exceptAll(want).count() == 0
         assert want.exceptAll(sink_rows).count() == 0
+
+
+def _part_files(root) -> dict[str, int]:
+    """sink name -> number of parquet part files under root/sink=<name>."""
+    return {d.name.split("=", 1)[1]: len(list(d.glob("part-*")))
+            for d in root.glob("sink=*")}
+
+
+def test_route_write_rebalances_not_salts(spark, parsed, tmp_path):
+    """The route write's pre-shuffle is an AQE REBALANCE on the partition
+    columns, not a hash on (sink, pmod(xxhash64(doc_id), 16)): each sink
+    is one task's output, so one file per sink on small input."""
+    import re
+
+    enriched = PL.enrich(parsed, spark, with_lang=False)
+    mark = last_execution_id(spark)
+    counts = PL.route_write(enriched, str(tmp_path / "sinks"))
+    plans = "\n".join(p for _, p in sql_plans(spark, mark))
+    assert "InsertIntoHadoopFsRelationCommand" in plans
+    assert "REBALANCE_PARTITIONS_BY_COL" in plans
+    assert not re.search(r"pmod\(xxhash64\([^)]*\), 16\)", plans)
+    assert _part_files(tmp_path / "sinks") == dict.fromkeys(counts, 1)
+
+
+def test_route_write_splits_hot_sink_at_runtime(spark, parsed, tmp_path):
+    """Skew handling is measured, not fixed: once AQE's advisory
+    partition size is below a sink's shuffled bytes, the hot sink is
+    split across tasks and lands in more than one file."""
+    enriched = PL.enrich(parsed.repartition(4), spark, with_lang=False)
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        counts = PL.route_write(enriched, str(tmp_path / "sinks"))
+    finally:
+        spark.conf.set(key, old)
+    hot = max(counts, key=counts.get)
+    assert _part_files(tmp_path / "sinks")[hot] > 1
+    back = spark.read.parquet(str(tmp_path / "sinks"))
+    assert back.filter(F.col("sink") == hot).count() == counts[hot]
 
 
 def test_hourly_agg_conservation(spark, parsed):
